@@ -79,6 +79,9 @@ _CACHE_MEMO: dict[tuple[int, str, str | None], DataFrame] = {}
 # race release_cached() could otherwise reopen.
 _CACHE_LOCK = __import__("threading").Lock()
 _CACHE_KEY_LOCKS: dict[tuple[int, str, str | None], object] = {}
+# release_cached() calls so far: a cached() whose build overlapped a
+# release sees it changed and does not memoize its frame (see cached())
+_CACHE_RELEASES = 0
 
 
 # NOTE on a size gate deliberately NOT added here (r14): gating these
@@ -118,13 +121,20 @@ def cached(name: str, builder, spark, sf_dir) -> DataFrame:
         klock = _CACHE_KEY_LOCKS.setdefault(
             key, __import__("threading").Lock()
         )
+        releases = _CACHE_RELEASES
     with klock:
         with _CACHE_LOCK:
             df = _CACHE_MEMO.get(key)
         if df is None:
             df = builder(spark, sf_dir).cache()
             with _CACHE_LOCK:
-                _CACHE_MEMO[key] = df
+                # a release that ran during the build has already swept
+                # the memo; storing now would leave a cached frame behind it
+                released = _CACHE_RELEASES != releases
+                if not released:
+                    _CACHE_MEMO[key] = df
+            if released:
+                df.unpersist()
     return df
 
 
@@ -137,8 +147,19 @@ def release_cached(spark=None, blocking: bool = True) -> None:
     showed up as long-session dispersion on the cache-heavy rows
     (customer_segmentation's 7→17 s first-pass flapping). Waiting for
     block removal costs milliseconds here and makes every timed run
-    start from the same storage-memory state."""
-    for key, df in list(_CACHE_MEMO.items()):
-        if spark is None or key[0] == id(spark):
-            df.unpersist(blocking=blocking)
-            del _CACHE_MEMO[key]
+    start from the same storage-memory state.
+
+    Matching entries are popped under the memo lock and unpersisted
+    outside it, so a concurrent cached() never sees a half-released
+    memo; a cached() whose build overlaps the release does not memoize
+    (or keep cached) its frame."""
+    global _CACHE_RELEASES
+    with _CACHE_LOCK:
+        _CACHE_RELEASES += 1
+        dropped = [
+            _CACHE_MEMO.pop(key)
+            for key in list(_CACHE_MEMO)
+            if spark is None or key[0] == id(spark)
+        ]
+    for df in dropped:
+        df.unpersist(blocking=blocking)

@@ -20,6 +20,18 @@ its load-bearing core (an Iceberg-style snapshot log):
   the metastore/catalog pointer swap). A reader resolves ``_CURRENT`` once
   and then reads only that snapshot's files, so a concurrent commit is
   invisible to it: it sees the old version in full, never a partial mix.
+* **One write path.** ``overwrite``, ``append``, ``append_from`` and
+  ``replace_partitions_and_append`` (with ``overwrite_partitions``) all
+  commit through ``_write``: stage the new rows once, then per commit
+  attempt re-read the live manifest, check layout and schema, enforce
+  CHECK constraints on the staged files, and commit the kept files plus
+  the staged ones. The single per-writer choice is which files are kept
+  and from which manifest: none (overwrite), all of the live one
+  (append), all of a pinned snapshot (append_from), or all but the
+  replaced partition directories of the live or pinned one. Table state
+  (constraints, the stats declaration, per-file stats, the ``evolved``
+  marker) always comes from the live manifest, so a lost race retried
+  against the winner can never drop or bypass it.
 
 Readers load the file list with ``basePath = <table>/data`` so Hive-style
 partition directories (``order_month=.../``) still yield partition columns
@@ -208,36 +220,38 @@ class AcidTable:
     def _schema_map(df: DataFrame) -> dict[str, str]:
         return {f.name: f.dataType.simpleString() for f in df.schema.fields}
 
-    def _check_append_schema(self, df: DataFrame) -> None:
-        """Appending a frame whose columns drift from the table's schema
-        would not fail here — parquet files are self-describing — but a
-        later read would silently resolve to ONE of the schemas (Spark
-        takes the schema from a sample file unless mergeSchema is on),
-        dropping or nulling columns with no error. Fail the append
-        instead. Schema EVOLUTION is a separate manifest-level feature
-        (``append(..., merge_schema=True)`` / :meth:`_evolve_schema`) —
-        the engine's models have fixed contracts, so UNDECLARED drift is
-        always a bug."""
-        stored = self.manifest().get("meta", {}).get("schema")
-        if stored and stored != self._schema_map(df):
-            raise ValueError(
-                f"{self.path}: append schema {self._schema_map(df)} "
-                f"does not match table schema {stored}"
-            )
+    def _require_schema(
+        self, stored: dict | None, mine: dict, evolving: bool = False
+    ) -> None:
+        """Refuse a write whose columns drift from the table's schema.
+        Parquet files are self-describing, so the write itself would not
+        fail, but a later read would silently resolve to ONE of the
+        schemas (Spark samples a file's footer unless mergeSchema is on),
+        dropping or nulling columns with no error. ``evolving`` (an
+        ``append(merge_schema=True)``) also accepts a table schema that
+        is a same-typed SUBSET of ``mine``: the evolved superset
+        supersedes it."""
+        if not stored or stored == mine:
+            return
+        if evolving and all(mine.get(c) == t for c, t in stored.items()):
+            return
+        raise ValueError(
+            f"{self.path}: write schema {mine} does not match table "
+            f"schema {stored}"
+        )
 
-    def _evolve_schema(self, df: DataFrame) -> tuple[DataFrame, dict[str, str]]:
+    def _evolve_schema(self, df: DataFrame, stored: dict) -> DataFrame:
         """Additive schema evolution (Delta's mergeSchema, manifest-level):
         the write may ADD columns (appended after the stored order) and
         may OMIT stored columns (filled with typed nulls so every file
         carries the full evolved schema); a TYPE change on a shared
         column is refused — silent widening/narrowing corrupts readers,
         and a type migration is a rewrite, not an append. Returns the
-        aligned frame and the evolved schema map. Old files are NOT
+        frame aligned to the evolved schema. Old files are NOT
         rewritten: :meth:`read` projects evolved snapshots through the
         manifest schema, so pre-evolution files surface typed nulls for
         the added columns — at 100 TB an added column costs one manifest
         commit, never a corpus rewrite."""
-        stored = self.manifest().get("meta", {}).get("schema") or {}
         mine = self._schema_map(df)
         clash = {
             c: (stored[c], mine[c])
@@ -253,13 +267,12 @@ class AcidTable:
         from pyspark.sql import functions as F
 
         evolved = {**stored, **{c: t for c, t in mine.items() if c not in stored}}
-        aligned = df.select(
+        return df.select(
             *[
                 F.col(c) if c in mine else F.lit(None).cast(t).alias(c)
                 for c, t in evolved.items()
             ]
         )
-        return aligned, evolved
 
     # ------------------------------------------------- write-time file stats
 
@@ -320,23 +333,6 @@ class AcidTable:
             }
 
         return self._commit_table_state(build)
-
-    def _collect_write_stats(
-        self, files: list[str], src_meta: dict, meta: dict
-    ) -> dict:
-        """Merge footer-read stats for this commit's new files into
-        ``meta`` when the source manifest declares stats columns, and
-        carry the declaration forward (sticky rider)."""
-        cols = src_meta.get("stats_columns")
-        if not cols:
-            return meta
-        from .layout import file_column_stats
-
-        new_stats = file_column_stats(self.data_dir, files, set(cols))
-        out = {**meta, "stats_columns": list(cols)}
-        if new_stats:
-            out["stats"] = {**out.get("stats", {}), **new_stats}
-        return out
 
     # ---------------------------------------------------- CHECK constraints
 
@@ -453,77 +449,6 @@ class AcidTable:
             .parquet(*paths)
         )
 
-    def _validate_staged(
-        self,
-        spark: SparkSession,
-        stages: list[str],
-        files: list[str],
-        cons: dict[str, str],
-        schema_map: dict,
-    ) -> None:
-        """Enforce ``cons`` against the STAGED files — the exact bytes
-        the commit would reference — not the caller's frame (r11
-        ADVICE): validating the unstaged DataFrame re-evaluates its
-        plan, so a nondeterministic source (rand(), a re-read of a
-        mutating table) could pass validation while the staged parquet
-        violates the constraint. Delta enforces during the write itself;
-        reading back the delta-sized staged files is the engine's
-        equivalent. On violation the staged files are discarded before
-        raising (no disk leak)."""
-        if not cons or not files:
-            return
-        try:
-            self._violations_or_raise(
-                self._staged_frame(spark, files, schema_map), cons, "this write"
-            )
-        except BaseException:
-            self._discard_staged(files)
-            for s in stages:
-                shutil.rmtree(s, ignore_errors=True)
-            raise
-
-    def _recheck_constraints(
-        self, cur_manifest: dict, validated: dict[str, str], staged_thunk
-    ) -> dict[str, str]:
-        """Commit-time constraint re-validation, run INSIDE the retry
-        loop against the manifest this attempt merges with: a constraint
-        added (or changed) since the pre-stage check is enforced here —
-        on the STAGED frame ``staged_thunk`` returns (None when nothing
-        was staged) — and the CURRENT set is what the commit carries: a
-        concurrent add_constraint can neither be silently dropped from
-        meta nor bypassed by in-flight rows (the same reopened-race
-        class the r6/r7 fixes closed for schema and stats). Returns the
-        current constraint set."""
-        cur = dict(cur_manifest.get("meta", {}).get("constraints", {}))
-        delta = {n: e for n, e in cur.items() if validated.get(n) != e}
-        if delta:
-            frame = staged_thunk()
-            if frame is not None:
-                self._violations_or_raise(frame, delta, "this write")
-        return cur
-
-    def _recheck_stats(
-        self, src_meta: dict, files: list[str], attempt_meta: dict
-    ) -> dict:
-        """Per-attempt twin of :meth:`_collect_write_stats` (r11 ADVICE):
-        a ``set_stats_columns`` that lands between the pre-stage
-        manifest read and a retried commit would otherwise lose its
-        declaration — this writer's manifest carried constraints and the
-        evolved flag through the retry but not stats — silently
-        disabling file skipping for every future append. Carries the
-        CURRENT declaration and footer-reads stats for this commit's
-        staged files when the pre-stage pass didn't."""
-        cols = src_meta.get("stats_columns")
-        if not cols or attempt_meta.get("stats_columns") == list(cols):
-            return attempt_meta
-        from .layout import file_column_stats
-
-        new_stats = file_column_stats(self.data_dir, files, set(cols))
-        out = {**attempt_meta, "stats_columns": list(cols)}
-        if new_stats:
-            out["stats"] = {**out.get("stats", {}), **new_stats}
-        return out
-
     def _discard_staged(self, files: list[str]) -> None:
         """Remove staged-but-never-committed data files. They are
         exclusively this writer's (unique part-file names, referenced by
@@ -541,53 +466,178 @@ class AcidTable:
         stage: str,
         staged_files: list[str],
         partition_by: list[str],
-        meta: dict,
         recompute,
         max_retries: int = 5,
     ) -> int:
-        """The ONE commit-retry protocol every writer goes through.
+        """The ONE commit-retry protocol every staged write goes through.
 
-        ``recompute() -> (all_files, expected_parent)`` — or
-        ``(all_files, expected_parent, meta)`` when the attempt derives
-        manifest metadata from the parent it merged against (append's
-        stats carry-forward): the per-attempt meta replaces the outer
-        ``meta`` for THAT commit attempt only, so a retry never commits
-        a previous attempt's stale merge (r7 advisor fix) —
-        re-reads the CURRENT manifest, re-validates compatibility
-        (layout, schema — a concurrent overwrite may have changed
-        either since this writer's pre-stage checks), and merges the
-        staged files against it; raising ValueError from recompute
-        aborts the commit. On a
-        lost race the loop backs off and re-runs recompute against the
-        winner's manifest. On ANY terminal failure (retries exhausted,
+        ``recompute() -> (all_files, expected_parent, meta)`` runs once
+        per attempt: it re-reads the CURRENT manifest, re-validates
+        compatibility (a concurrent commit may have changed layout,
+        schema or table state since this writer's pre-stage checks) and
+        derives the attempt's file list and manifest meta from it, so a
+        retry never commits a previous attempt's stale merge. Raising
+        ValueError from recompute aborts the commit. On a lost race the
+        loop backs off and re-runs recompute against the winner's
+        manifest. On ANY terminal failure (retries exhausted,
         incompatible concurrent change, or an unexpected error) the
         staged files are discarded — no silent disk leak. A
         FileNotFoundError retries like a conflict: it means a concurrent
         vacuum expired the manifest between recompute's pointer read and
         the open; the next attempt reads the newer pointer."""
         try:
-            try:
-                for attempt in range(max_retries + 1):
-                    try:
-                        out = recompute()
-                        all_files, parent = out[0], out[1]
-                        attempt_meta = out[2] if len(out) > 2 else meta
-                        return self._commit(
-                            all_files,
-                            partition_by,
-                            attempt_meta,
-                            expected_parent=parent,
-                        )
-                    except (CommitConflictError, FileNotFoundError):
-                        if attempt == max_retries:
-                            raise
-                        _backoff(attempt)
-                raise AssertionError("unreachable")
-            except BaseException:
-                self._discard_staged(staged_files)
-                raise
+            for attempt in range(max_retries + 1):
+                try:
+                    files, parent, meta = recompute()
+                    return self._commit(
+                        files, partition_by, meta, expected_parent=parent
+                    )
+                except (CommitConflictError, FileNotFoundError):
+                    if attempt == max_retries:
+                        raise
+                    _backoff(attempt)
+            raise AssertionError("unreachable")
+        except BaseException:
+            self._discard_staged(staged_files)
+            raise
         finally:
             shutil.rmtree(stage, ignore_errors=True)
+
+    def _write(
+        self,
+        df: DataFrame,
+        partition_by: list[str] | None,
+        meta: dict | None,
+        *,
+        keep=None,
+        base_version: int | None = None,
+        validate=None,
+        merge_schema: bool = False,
+        max_retries: int = 5,
+    ) -> int:
+        """The one data-write path: stage ``df`` once, then commit the
+        files the new snapshot keeps plus the staged ones.
+
+        ``keep(files) -> kept`` is the only per-writer choice: which of
+        the SOURCE manifest's files survive. The source is the pinned
+        ``base_version`` snapshot when given, else the live manifest,
+        re-read on every attempt. ``keep=None`` (a full overwrite)
+        keeps nothing and reads no source, so it may change the
+        table's layout and schema; every other writer must match the
+        source's layout and schema (``merge_schema`` evolves the write
+        additively instead, see :meth:`_evolve_schema`).
+
+        Table STATE always comes from the LIVE manifest the commit
+        parents on, resolved per attempt in ``recompute``: the CHECK
+        constraints (a concurrently added one is enforced on the staged
+        files, a concurrently dropped one is not resurrected), the
+        stats declaration (this write's files get footer-read stats for
+        it), the per-file stats of kept files (the live entries win over
+        a pinned source's: a concurrent re-declaration backfilled them
+        under the declaration being committed) and the sticky
+        ``evolved`` marker. A concurrent commit can therefore neither be
+        silently undone nor bypassed by a retry.
+
+        ``validate(live_manifest)`` runs inside every attempt, against
+        the manifest the commit would build on (raise ValueError to
+        abort; the staged files are discarded)."""
+        from .layout import file_column_stats
+
+        src0 = None
+        if keep is not None and (base_version is not None or self.exists()):
+            src0 = self.manifest(base_version)
+            layout = src0["partition_by"]
+            if partition_by is not None and list(partition_by) != layout:
+                raise ValueError(
+                    f"{self.path}: write partition_by={partition_by} "
+                    f"conflicts with the table's layout {layout}"
+                )
+            partition_by = layout
+            stored = src0.get("meta", {}).get("schema") or {}
+            if merge_schema:
+                df = self._evolve_schema(df, stored)
+            self._require_schema(stored, self._schema_map(df), merge_schema)
+        partition_by = list(partition_by or [])
+        mine = self._schema_map(df)
+        meta = {**(meta or {}), "schema": mine}
+        if merge_schema and src0 is not None:
+            meta["evolved"] = True
+        spark = df.sparkSession
+        stage, files = self._stage(df, partition_by)
+        validated: dict[str, str] = {}  # constraints enforced on the staged files
+        footer: dict[tuple, dict] = {}  # stats columns -> staged files' stats
+
+        def recompute() -> tuple[list[str], int, dict]:
+            # ONE live-manifest read feeds the validate hook, the checks,
+            # the table state AND expected_parent: with two pointer
+            # reads, a commit landing between them would pass validate
+            # yet be silently replaced
+            live = self.manifest() if self.exists() else None
+            src = src0 if base_version is not None else live
+            kept = keep(src["files"]) if keep is not None and src else []
+            if live is None:
+                return sorted(kept + files), 0, meta
+            if validate is not None:
+                validate(live)
+            if keep is not None:
+                if live["partition_by"] != partition_by:
+                    # a concurrent creator/overwrite changed the layout:
+                    # the staged files don't fit its directories
+                    raise ValueError(
+                        f"{self.path}: concurrent writer changed "
+                        f"partition_by to {live['partition_by']}; staged "
+                        f"{partition_by}"
+                    )
+                self._require_schema(
+                    live.get("meta", {}).get("schema"), mine, merge_schema
+                )
+            state = live.get("meta", {})
+            cons = state.get("constraints", {})
+            unchecked = {
+                n: e for n, e in cons.items() if validated.get(n) != e
+            }
+            if unchecked and files:
+                # enforced on the STAGED files, the commit's actual
+                # content — never the caller's frame, whose plan may be
+                # nondeterministic; ONE scan for all
+                self._violations_or_raise(
+                    self._staged_frame(spark, files, mine),
+                    unchecked,
+                    "this write",
+                )
+            validated.update(unchecked)
+            out = {k: v for k, v in meta.items() if k != "constraints"}
+            if cons:
+                out["constraints"] = dict(cons)
+            if keep is not None and (
+                state.get("evolved") or src.get("meta", {}).get("evolved")
+            ):
+                # kept files may predate a schema evolution: reads must
+                # keep projecting through the manifest schema
+                out["evolved"] = True
+            kept_set = set(kept)
+            stats = {
+                f: s
+                for m in (src, live)
+                for f, s in m.get("meta", {}).get("stats", {}).items()
+                if f in kept_set
+            }
+            stats.update(meta.get("stats", {}))
+            cols = state.get("stats_columns")
+            if cols:
+                out["stats_columns"] = list(cols)
+                if tuple(cols) not in footer:
+                    footer[tuple(cols)] = file_column_stats(
+                        self.data_dir, files, set(cols)
+                    )
+                stats.update(footer[tuple(cols)])
+            if stats:
+                out["stats"] = stats
+            return sorted(kept + files), live["version"], out
+
+        return self._commit_with_retry(
+            stage, files, partition_by, recompute, max_retries
+        )
 
     def overwrite(
         self,
@@ -600,66 +650,16 @@ class AcidTable:
 
         On a commit conflict the staged files ARE the complete new table,
         so the retry only refreshes the parent version — by overwrite
-        semantics the concurrent commit's content is replaced.
+        semantics the concurrent commit's content is replaced. CHECK
+        constraints and the stats declaration are table state, not
+        snapshot content: they survive the rewrite (Delta table-property
+        semantics) and the replacement rows must satisfy them.
 
         ``validate(cur_manifest)`` (optional) runs inside every commit
         attempt against the manifest the commit would replace — the hook
         read-transform-write callers (``merge_rows``) use to detect a
         concurrent commit since their read (raise ValueError to abort)."""
-        partition_by = partition_by or []
-        meta = {**(meta or {}), "schema": self._schema_map(df)}
-        spark = df.sparkSession
-        my_schema = meta["schema"]
-        cons_validated: dict[str, str] = {}
-        if self.exists():
-            # CHECK constraints are table state, not snapshot content —
-            # they survive a full rewrite (Delta table-property
-            # semantics) and the replacement rows must satisfy them
-            cons_validated = self.constraints()
-        stage, files = self._stage(df, partition_by)
-        # enforced on the STAGED files, the commit's actual content
-        self._validate_staged(spark, [stage], files, cons_validated, my_schema)
-        if self.exists():
-            meta = self._collect_write_stats(
-                files, self.manifest().get("meta", {}), meta
-            )
-
-        def _staged() -> DataFrame | None:
-            return (
-                self._staged_frame(spark, files, my_schema) if files else None
-            )
-
-        def recompute() -> tuple[list[str], int, dict]:
-            if not self.exists():
-                return files, 0, meta
-            # ONE manifest read feeds both the validation hook and the
-            # expected_parent: with two separate pointer reads, a
-            # concurrent commit landing between them would pass
-            # validate (which saw the old manifest) yet commit with the
-            # racer's version as parent — silently replacing the
-            # racer's rows, the exact lost update the merge_rows
-            # version guard exists to prevent (r6 advisor fix). Any
-            # commit after this read trips _commit's expected_parent
-            # check, which retries and re-validates against the new
-            # manifest.
-            m = self.manifest()
-            if validate is not None:
-                validate(m)
-            # per-attempt constraint recheck: a concurrently added
-            # constraint is enforced on the staged files here and
-            # carried, never silently dropped by a retry
-            cons_now = self._recheck_constraints(m, cons_validated, _staged)
-            attempt_meta = meta
-            if cons_now and "constraints" not in attempt_meta:
-                attempt_meta = {**attempt_meta, "constraints": cons_now}
-            # per-attempt stats recheck: a set_stats_columns landing
-            # since the pre-stage read must not lose its declaration
-            attempt_meta = self._recheck_stats(
-                m.get("meta", {}), files, attempt_meta
-            )
-            return files, m["version"], attempt_meta
-
-        return self._commit_with_retry(stage, files, partition_by, meta, recompute)
+        return self._write(df, partition_by, meta, validate=validate)
 
     def append(
         self,
@@ -686,99 +686,9 @@ class AcidTable:
         and the committed manifest is flagged ``evolved`` so
         :meth:`read` projects EVERY file — including pre-evolution ones —
         through the manifest schema. Old files are never rewritten."""
-        evolved_flag = False
-        cons_validated: dict[str, str] = {}
-        if self.exists():
-            existing = self.manifest()["partition_by"]
-            if partition_by is not None and list(partition_by) != existing:
-                raise ValueError(
-                    f"{self.path}: append partition_by={partition_by} "
-                    f"conflicts with the table's layout {existing}"
-                )
-            partition_by = existing
-            if merge_schema:
-                df, _evolved = self._evolve_schema(df)
-                evolved_flag = True
-            else:
-                self._check_append_schema(df)
-            cons_validated = self.constraints()
-        else:
-            partition_by = partition_by or []
-        meta = {**(meta or {}), "schema": self._schema_map(df)}
-        if evolved_flag:
-            meta["evolved"] = True
-        spark = df.sparkSession
-        my_schema = meta["schema"]  # the schema being committed, verbatim
-        stage, files = self._stage(df, partition_by)
-        # enforced on the STAGED files, the commit's actual content
-        self._validate_staged(spark, [stage], files, cons_validated, my_schema)
-        if self.exists():
-            meta = self._collect_write_stats(
-                files, self.manifest().get("meta", {}), meta
-            )
-
-        def _staged() -> DataFrame | None:
-            return (
-                self._staged_frame(spark, files, my_schema) if files else None
-            )
-
-        def recompute() -> tuple[list[str], int, dict]:
-            if not self.exists():
-                return sorted(files), 0, meta
-            prev = self.manifest()
-            if prev["partition_by"] != partition_by:
-                # a concurrent creator/overwrite raced us with a
-                # different layout — our staged files don't fit its dirs
-                raise ValueError(
-                    f"{self.path}: concurrent writer set partition_by="
-                    f"{prev['partition_by']}, staged {partition_by}"
-                )
-            stored = prev.get("meta", {}).get("schema")
-            if stored and stored != my_schema:
-                # merge_schema: a racer appending the PRE-evolution schema
-                # is compatible — my manifest supersedes with the evolved
-                # superset. Anything but a same-typed subset still fails.
-                compatible = merge_schema and all(
-                    my_schema.get(c) == t for c, t in stored.items()
-                )
-                if not compatible:
-                    raise ValueError(
-                        f"{self.path}: append schema {my_schema} does "
-                        f"not match table schema {stored}"
-                    )
-            # carry forward per-file column stats (layout.py) for files
-            # this append keeps: an append must not disable file skipping
-            # for the still-live z-ordered files (Delta keeps stats per
-            # AddFile, so they survive appends there too). Merged into a
-            # PER-ATTEMPT copy — mutating the captured meta would let a
-            # lost-race retry commit the losing attempt's live set, with
-            # stale entries for files the winner dropped (r7 advisor fix)
-            attempt_meta = meta
-            prev_stats = prev.get("meta", {}).get("stats", {})
-            if prev_stats:
-                live = {f: s for f, s in prev_stats.items() if f in set(prev["files"])}
-                attempt_meta = {
-                    **meta, "stats": {**live, **meta.get("stats", {})}
-                }
-            # the evolved marker is sticky: once any snapshot evolved, every
-            # descendant keeps projecting reads through the manifest schema
-            # (pre-evolution files still lack the added columns)
-            if prev.get("meta", {}).get("evolved") and not attempt_meta.get("evolved"):
-                attempt_meta = {**attempt_meta, "evolved": True}
-            # CHECK constraints are sticky the same way — and rechecked
-            # per attempt against the staged files, so a constraint
-            # added since the pre-stage read is enforced, not bypassed
-            cons_now = self._recheck_constraints(prev, cons_validated, _staged)
-            if cons_now and "constraints" not in attempt_meta:
-                attempt_meta = {**attempt_meta, "constraints": cons_now}
-            # ... and so is a stats declaration (r11 ADVICE)
-            attempt_meta = self._recheck_stats(
-                prev.get("meta", {}), files, attempt_meta
-            )
-            return sorted(prev["files"] + files), prev["version"], attempt_meta
-
-        return self._commit_with_retry(
-            stage, files, partition_by, meta, recompute, max_retries
+        return self._write(
+            df, partition_by, meta, keep=list, merge_schema=merge_schema,
+            max_retries=max_retries,
         )
 
     def append_from(
@@ -791,7 +701,9 @@ class AcidTable:
         references exactly ``manifest(base_version).files`` plus this
         write's staged files — commits that landed SINCE the base
         contribute nothing (their files stay referenced only by their
-        own manifests).
+        own manifests). Table state (constraints, stats declaration,
+        layout and schema checks) still follows the live manifest the
+        commit parents on.
 
         The multi-table-transaction building block (used by the dedup
         index, llm/dedup_incremental.py): when several tables change
@@ -806,122 +718,9 @@ class AcidTable:
         append against the same ``base_version`` yields base + exactly
         this attempt's rows, however many earlier attempts died
         mid-sequence."""
-        base = self.manifest(base_version)
-        partition_by = list(base["partition_by"])
-        stored = base.get("meta", {}).get("schema")
-        mine = self._schema_map(df)
-        if stored and stored != mine:
-            raise ValueError(
-                f"{self.path}: append_from schema {mine} does not match "
-                f"base snapshot v{base_version}'s schema {stored}"
-            )
-        meta = {**(meta or {}), "schema": mine, "append_from": base_version}
-        # carry forward the base snapshot's per-file column stats for the
-        # files this commit keeps — append() does the same for its parent;
-        # dropping them here would silently disable file skipping for all
-        # base files of a z-ordered table folded through append_from (r10
-        # advisor finding). Merged once, outside recompute: the base is
-        # PINNED, so its live-stats set never changes across retries.
-        base_stats = base.get("meta", {}).get("stats", {})
-        if base_stats:
-            live = {
-                f: s for f, s in base_stats.items() if f in set(base["files"])
-            }
-            meta = {**meta, "stats": {**live, **meta.get("stats", {})}}
-        # sticky evolved marker (see append): the pinned base's files may
-        # predate a schema evolution, so reads must keep projecting
-        if base.get("meta", {}).get("evolved"):
-            meta = {**meta, "evolved": True}
-        # CHECK constraints are TABLE STATE, which lives on the LIVE
-        # manifest this commit parents on (the pinned base governs
-        # FILES): validated here against the live set, re-checked per
-        # commit attempt inside recompute — r12 review fix: the old
-        # base-pinned handling silently ERASED a concurrently added
-        # constraint from meta and resurrected dropped ones
-        cons_validated = self.constraints() if self.exists() else {}
-        spark = df.sparkSession
-        stage, files = self._stage(df, partition_by)
-        # enforced on the STAGED files, the commit's actual content
-        self._validate_staged(spark, [stage], files, cons_validated, mine)
-        meta = self._collect_write_stats(files, base.get("meta", {}), meta)
-
-        def _staged() -> DataFrame | None:
-            return self._staged_frame(spark, files, mine) if files else None
-
-        def recompute() -> tuple[list[str], int, dict]:
-            if not self.exists():
-                return sorted(base["files"] + files), 0, meta
-            # file carry-forward is pinned to the base, but TABLE STATE
-            # (constraints, stats declaration, schema, layout) always
-            # lives on the LIVE manifest this commit parents on — the
-            # r12 review found append_from silently ERASING a
-            # concurrently added constraint or stats declaration (the
-            # same reopened-race class the sibling writers recheck).
-            cur = self.manifest()
-            if cur["partition_by"] != partition_by:
-                raise ValueError(
-                    f"{self.path}: concurrent writer changed partition_by "
-                    f"to {cur['partition_by']}; staged {partition_by}"
-                )
-            cur_schema = cur.get("meta", {}).get("schema")
-            if cur_schema and cur_schema != mine:
-                # a concurrent schema evolution cannot be silently
-                # reverted by committing the pinned base's schema —
-                # refuse; the caller re-runs against the evolved table
-                raise ValueError(
-                    f"{self.path}: concurrent writer changed the table "
-                    f"schema to {cur_schema}; this pinned append staged "
-                    f"{mine} — re-run against the new snapshot"
-                )
-            cons_now = self._recheck_constraints(cur, cons_validated, _staged)
-            # the LIVE set is authoritative either way: a concurrent add
-            # is carried AND enforced above; a concurrent drop is not
-            # resurrected by recommitting the pinned base's set
-            attempt_meta = dict(meta)
-            if cons_now:
-                attempt_meta["constraints"] = cons_now
-            else:
-                attempt_meta.pop("constraints", None)
-            if cur.get("meta", {}).get("evolved") and not attempt_meta.get(
-                "evolved"
-            ):
-                attempt_meta["evolved"] = True
-            attempt_meta = self._recheck_stats(
-                cur.get("meta", {}), files, attempt_meta
-            )
-            # _recheck_stats footer-reads only THIS commit's staged
-            # files; a concurrent set_stats_columns also backfilled
-            # footer stats for the carried BASE files onto the live
-            # manifest, and the pinned carry above holds only the base
-            # snapshot's (pre-declaration) entries — without this merge
-            # the committed manifest would declare stats_columns yet
-            # lack stats for every carried file, silently disabling
-            # file skipping for them until the next rewrite (r12
-            # ADVICE). Merge order matters for base files (r13 ADVICE):
-            # attempt_meta may hold the PINNED snapshot's entries for
-            # them, collected under a PREVIOUS stats_columns
-            # declaration — if the concurrent set_stats_columns
-            # re-declared a DIFFERENT column set, the live backfill is
-            # the one matching the committed declaration, so ``carried``
-            # wins. Safe for this commit's own files: carried is
-            # filtered to base names, which can never collide with the
-            # freshly staged uuid file names.
-            cur_stats = cur.get("meta", {}).get("stats", {})
-            if cur_stats:
-                carried = {
-                    f: s
-                    for f, s in cur_stats.items()
-                    if f in set(base["files"])
-                }
-                if carried:
-                    attempt_meta = {
-                        **attempt_meta,
-                        "stats": {**attempt_meta.get("stats", {}), **carried},
-                    }
-            return sorted(base["files"] + files), cur["version"], attempt_meta
-
-        return self._commit_with_retry(
-            stage, files, partition_by, meta, recompute
+        return self._write(
+            df, None, {**(meta or {}), "append_from": base_version},
+            keep=list, base_version=base_version,
         )
 
     def overwrite_partitions(
@@ -993,130 +792,29 @@ class AcidTable:
         snapshot; commits since contribute nothing."""
         from pyspark.sql import functions as F
 
-        prev = self.manifest(base_version)
-        partition_by = prev["partition_by"]
-        affected_dirs = {f"{part_col}={v}" for v in values}
-        stored_base = prev.get("meta", {}).get("schema")
-        for frame in (replace_df, append_df):
-            if frame is None:
-                continue
-            if stored_base and stored_base != self._schema_map(frame):
-                raise ValueError(
-                    f"{self.path}: write schema {self._schema_map(frame)} "
-                    f"does not match table schema {stored_base}"
-                )
-        meta = {**(meta or {}), "schema": self._schema_map(replace_df)}
-        # sticky evolved marker (see append): kept partitions may hold
-        # pre-evolution files that still need manifest-schema projection
-        if prev.get("meta", {}).get("evolved"):
-            meta = {**meta, "evolved": True}
-        # sticky constraints (enforced below on the WRITTEN subsets only —
-        # rows outside the replaced/appended ranges are not this commit's;
-        # carried + rechecked per commit attempt inside recompute)
-        prev_cons = dict(prev.get("meta", {}).get("constraints", {}))
-        my_schema = meta["schema"]
-
-        spark = replace_df.sparkSession
-        sub = replace_df.where(F.col(part_col).isin(list(values)))
+        affected = {f"{part_col}={v}" for v in values}
         # ONE staged write for both legs (r12): the manifest never
-        # distinguishes replace-files from append-files — the split is
-        # purely which partitions the rows land in, and partitionBy
-        # routes each row to its directory — so staging the union
-        # halves the write jobs of every replace+append commit (the
-        # dedup folds' cluster updates, SCD2's open/history split).
-        to_stage = sub
+        # distinguishes replace-files from append-files — partitionBy
+        # routes each row to its directory — so staging the union halves
+        # the write jobs of every replace+append commit
+        to_stage = replace_df.where(F.col(part_col).isin(list(values)))
         if append_df is not None:
-            app = append_df.where(~F.col(part_col).isin(list(values)))
-            to_stage = sub.unionByName(app)
-        stage, new_files = self._stage(to_stage, partition_by)
-        # both legs enforced on the STAGED files in one scan — the
-        # commit's actual content, one manifest, one validation
-        self._validate_staged(
-            spark, [stage], new_files, prev_cons, my_schema
-        )
-        meta = self._collect_write_stats(new_files, prev.get("meta", {}), meta)
-
-        def _staged() -> DataFrame | None:
-            return (
-                self._staged_frame(spark, new_files, my_schema)
-                if new_files
-                else None
+            self._require_schema(
+                self._schema_map(replace_df), self._schema_map(append_df)
             )
-
-        def recompute() -> tuple[list[str], int]:
-            cur = self.manifest()
-            if validate is not None:
-                validate(cur)
-            # per-attempt constraint recheck against the LIVE manifest
-            # (constraint changes always commit to it, even when file
-            # carry-forward is pinned to a base snapshot)
-            cons_now = self._recheck_constraints(cur, prev_cons, _staged)
-            # pinned mode: untouched partitions carry from the PINNED
-            # snapshot; the live manifest only supplies the parent slot.
-            src = cur if base_version is None else prev
-            if src["partition_by"] != partition_by:
-                raise ValueError(
-                    f"{self.path}: concurrent writer changed partition_by "
-                    f"to {src['partition_by']}; staged {partition_by}"
-                )
-            stored = src.get("meta", {}).get("schema")
-            if stored and stored != my_schema:
-                raise ValueError(
-                    f"{self.path}: write schema {my_schema} does not "
-                    f"match table schema {stored}"
-                )
-            kept = [
-                f
-                for f in src["files"]
-                if not any(part in f.split(os.sep) for part in affected_dirs)
-            ]
-            # stats carry-forward for kept files (same contract as
-            # append/append_from): replacing two partitions must not
-            # disable file skipping for every other partition's files.
-            attempt_meta = meta
-            src_stats = src.get("meta", {}).get("stats", {})
-            if src_stats:
-                live = {f: s for f, s in src_stats.items() if f in set(kept)}
-                attempt_meta = {
-                    **meta, "stats": {**live, **meta.get("stats", {})}
-                }
-            if cons_now and "constraints" not in attempt_meta:
-                attempt_meta = {**attempt_meta, "constraints": cons_now}
-            # per-attempt stats-declaration recheck (r11 ADVICE) — the
-            # declaration is table state, so the LIVE manifest carries it
-            attempt_meta = self._recheck_stats(
-                cur.get("meta", {}), new_files, attempt_meta
+            to_stage = to_stage.unionByName(
+                append_df.where(~F.col(part_col).isin(list(values)))
             )
-            # pinned mode carried stats from the PINNED snapshot only;
-            # a concurrent set_stats_columns backfilled the live
-            # manifest's entries for those same kept files — merge them
-            # or the committed manifest declares stats_columns without
-            # stats for any kept file (r12 ADVICE, same fix as
-            # append_from). The live ``carried`` entries win for kept
-            # files (r13 ADVICE): a concurrent RE-declaration to a
-            # different column set backfilled them under the committed
-            # declaration, while attempt_meta's kept entries are the
-            # pinned (pre-redeclaration) ones; kept names never collide
-            # with the staged uuid names, so this commit's own stats
-            # survive. Unpinned mode already carried cur's stats.
-            if base_version is not None:
-                cur_stats = cur.get("meta", {}).get("stats", {})
-                if cur_stats:
-                    carried = {
-                        f: s for f, s in cur_stats.items() if f in set(kept)
-                    }
-                    if carried:
-                        attempt_meta = {
-                            **attempt_meta,
-                            "stats": {
-                                **attempt_meta.get("stats", {}),
-                                **carried,
-                            },
-                        }
-            return sorted(kept + new_files), cur["version"], attempt_meta
-
-        return self._commit_with_retry(
-            stage, new_files, partition_by, meta, recompute
+        return self._write(
+            to_stage,
+            # the source's layout; a replace on a missing table raises here
+            self.manifest(base_version)["partition_by"],
+            meta,
+            keep=lambda files: [
+                f for f in files if affected.isdisjoint(f.split(os.sep))
+            ],
+            base_version=base_version,
+            validate=validate,
         )
 
     def merge_rows(
@@ -1159,7 +857,9 @@ class AcidTable:
         m = self.manifest()
         partition_by = m["partition_by"]
         base_version = m["version"]
-        self._check_append_schema(updates)
+        self._require_schema(
+            m.get("meta", {}).get("schema"), self._schema_map(updates)
+        )
         if updates.groupBy(key).count().where("count > 1").limit(1).count():
             raise ValueError(
                 f"{self.path}: merge updates contain duplicate {key!r} "

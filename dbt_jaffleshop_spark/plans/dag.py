@@ -318,6 +318,19 @@ def materialize_table_snapshot(
     return "full"
 
 
+def _abandon_exports(efutures: dict, exc: BaseException) -> None:
+    """A model raised ``exc``: exports not yet started are cancelled (a
+    failed run must not write export tables), and the ones already
+    running are waited for, so none outlives the run's cache release.
+    A finished export's exception is attached to ``exc`` as a note
+    instead of being dropped."""
+    for fut in efutures:
+        fut.cancel()
+    for fut, name in efutures.items():
+        if not fut.cancelled() and fut.exception() is not None:
+            exc.add_note(f"export {name} also failed: {fut.exception()!r}")
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str | None = None,
@@ -370,6 +383,43 @@ def run_pipeline(
     done: set[str] = set()
     lock = _threading.Lock()
 
+    def _reuse_or_commit(table, name: str, fp: str, build, spec=None) -> bool:
+        """Commit one pipeline table (model or export) unless
+        ``state_aware`` finds its stored snapshot fingerprint equal to
+        ``fp``; returns True when the snapshot is reused and nothing was
+        written. A commit goes through materialize_table_snapshot
+        (``spec`` supplies a model's layout and watermark; exports are
+        plain full overwrites) and is followed by the retention vacuum:
+        keep the committed snapshot plus its predecessor (readers that
+        resolved the pointer just before this commit still see an
+        intact snapshot). Under WAP the PUBLISHED version is protected
+        too — failed-audit runs stack unpublished versions above it and
+        a count-based window alone would eventually reclaim the version
+        branch-aware readers are still serving."""
+        if (
+            state_aware
+            and table.exists()
+            and table.manifest().get("meta", {}).get("fingerprint") == fp
+        ):
+            return True
+        partition_by = spec.partition_by if spec is not None else []
+        materialize_table_snapshot(
+            spark,
+            table,
+            build(),
+            part_col=partition_by[0] if partition_by else None,
+            partition_by=partition_by,
+            watermark_col=spec.watermark_col if spec is not None else None,
+            fingerprint=fp,
+            incremental=incremental,
+        )
+        pub_v = publish.published_version(name) if publish is not None else None
+        table.vacuum(
+            keep_last=2,
+            protect_versions={pub_v} if pub_v is not None else None,
+        )
+        return False
+
     def _run_model(name: str) -> None:
         spec = MODELS[name]
         _t0 = _time.perf_counter()
@@ -411,66 +461,34 @@ def run_pipeline(
             # real and the size estimate fits (_cache_policy). Matches
             # dbt view semantics externally either way.
             df = df.cache()
+        reused = False
         if spec.materialization == "table" and warehouse_dir:
             from pyspark.sql import functions as F
 
             from .acid import AcidTable
             from .state import model_fingerprint
 
-            path = os.path.join(warehouse_dir, name)
             out = df
             for col, expr in spec.partition_expr.items():
                 out = out.withColumn(col, F.expr(expr))
-            part_col = spec.partition_by[0] if spec.partition_by else None
-            table = AcidTable(path)
-            fp = model_fingerprint(MODELS, name, sf_dir)
-            if (
-                state_aware
-                and table.exists()
-                and table.manifest().get("meta", {}).get("fingerprint") == fp
-            ):
-                # state:modified skip — code, config, upstreams, and
-                # source data all unchanged: re-read the committed
-                # snapshot, write nothing, skip re-testing (the snapshot
-                # passed its tests when it was built).
-                df = table.read(spark).drop(*spec.partition_expr.keys())
-                df.createOrReplaceTempView(name)
-                with lock:
-                    materialized[name] = df
-                    results[name] = {
-                        "status": "reused",
-                        "seconds": round(_time.perf_counter() - _t0, 2),
-                    }
-                return
-            materialize_table_snapshot(
-                spark,
-                table,
-                out,
-                part_col=part_col,
-                partition_by=spec.partition_by,
-                watermark_col=spec.watermark_col,
-                fingerprint=fp,
-                incremental=incremental,
-            )
-            # Bound on-disk growth: keep the committed snapshot plus its
-            # predecessor (readers that resolved the pointer just before
-            # this commit still see an intact snapshot), drop older files.
-            # Under WAP, additionally protect the PUBLISHED version —
-            # failed-audit runs stack unpublished versions above it and
-            # a count-based window alone would eventually reclaim the
-            # version branch-aware readers are still serving.
-            pub_v = (
-                publish.published_version(name) if publish is not None
-                else None
-            )
-            table.vacuum(
-                keep_last=2,
-                protect_versions={pub_v} if pub_v is not None else None,
+            table = AcidTable(os.path.join(warehouse_dir, name))
+            reused = _reuse_or_commit(
+                table, name, model_fingerprint(MODELS, name, sf_dir),
+                lambda: out, spec,
             )
             df = table.read(spark).drop(*spec.partition_expr.keys())
         df.createOrReplaceTempView(name)
         with lock:
             materialized[name] = df
+        if reused:
+            # state:modified skip: the reused snapshot passed its tests
+            # when it was built, so they are not re-run
+            with lock:
+                results[name] = {
+                    "status": "reused",
+                    "seconds": round(_time.perf_counter() - _t0, 2),
+                }
+            return
 
         test_failures = {}
         if spec.tests:
@@ -532,47 +550,23 @@ def run_pipeline(
         from .acid import AcidTable
         from .exports import EXPORTS
 
-        from .state import export_fingerprint
-
         for _spec in EXPORTS.values():
             export_by_mart.setdefault(_spec.depends_on, []).append(_spec)
 
         def _run_export(spec) -> None:
+            from .state import export_fingerprint
+
             _t0 = _time.perf_counter()
             query = SAVED_QUERIES[spec.saved_query]
             table = AcidTable(os.path.join(warehouse_dir, spec.name))
-            efp = export_fingerprint(MODELS, spec, query, sf_dir)
-            if (
-                state_aware
-                and table.exists()
-                and table.manifest().get("meta", {}).get("fingerprint")
-                == efp
-            ):
-                with lock:
-                    results[f"export:{spec.name}"] = {
-                        "status": "reused",
-                        "seconds": round(_time.perf_counter() - _t0, 2),
-                    }
-                return
-            edf = query.to_df(spark, sf_dir)
-            table.overwrite(edf, meta={"fingerprint": efp})
-            # same retention policy as the marts (each run otherwise
-            # accumulates one export snapshot forever), same publish
-            # pin under WAP
-            epub_v = (
-                publish.published_version(spec.name)
-                if publish is not None
-                else None
-            )
-            table.vacuum(
-                keep_last=2,
-                protect_versions=(
-                    {epub_v} if epub_v is not None else None
-                ),
+            reused = _reuse_or_commit(
+                table, spec.name,
+                export_fingerprint(MODELS, spec, query, sf_dir),
+                lambda: query.to_df(spark, sf_dir),
             )
             with lock:
                 results[f"export:{spec.name}"] = {
-                    "status": "ok",
+                    "status": "reused" if reused else "ok",
                     "seconds": round(_time.perf_counter() - _t0, 2),
                 }
 
@@ -603,7 +597,11 @@ def run_pipeline(
                 finished, _ = wait(list(futures), return_when=FIRST_COMPLETED)
                 for fut in finished:
                     name = futures.pop(fut)
-                    fut.result()  # propagate builder/test exceptions
+                    try:
+                        fut.result()  # propagate builder/test exceptions
+                    except BaseException as exc:
+                        _abandon_exports(efutures, exc)
+                        raise
                     done.add(name)
                     # eager exports (r15): _run_model recorded this
                     # model's final status (and any fail_fast failure)

@@ -245,7 +245,7 @@ def optimize_zorder(
         "stats": stats,
     }
 
-    def recompute() -> tuple[list[str], int]:
+    def recompute() -> tuple[list[str], int, dict]:
         cur = table.manifest()
         if cur["version"] != v0:
             raise ConcurrentWriteError(
@@ -253,9 +253,9 @@ def optimize_zorder(
                 f"rewrite read v{v0} — rerun optimize_zorder on the new "
                 "snapshot (retry-merging would drop the racer's rows)"
             )
-        return files, v0
+        return files, v0, meta
 
-    return table._commit_with_retry(stage, files, [], meta, recompute)
+    return table._commit_with_retry(stage, files, [], recompute)
 
 
 # ------------------------------------------------------------- skipping

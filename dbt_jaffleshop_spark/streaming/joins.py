@@ -56,11 +56,22 @@ _CONF_LOCK = threading.Lock()
 
 def _attribution_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     """ceil(input bytes / target), floored at 4, capped at the session
-    shuffle-partition count."""
-    size = sum(
-        os.path.getsize(p)
-        for p in glob.glob(os.path.join(sf_dir, "events*.parquet"))
-    )
+    shuffle-partition count. A source may be one parquet file or a
+    directory of part-files (what ``df.write.parquet`` produces); the
+    latter is sized by its leaf files, skipping Spark's hidden
+    ``_``/``.`` metadata files like the reader does."""
+    size = 0
+    for src in glob.glob(os.path.join(sf_dir, "events*.parquet")):
+        if os.path.isfile(src):
+            size += os.path.getsize(src)
+            continue
+        for root, dirs, names in os.walk(src):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            size += sum(
+                os.path.getsize(os.path.join(root, n))
+                for n in names
+                if not n.startswith(("_", "."))
+            )
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
     want = -(-size // _STATE_TARGET_BYTES)
     return max(4, min(sess, want))

@@ -23,7 +23,9 @@ import pandas as pd
 
 
 def _canon_cell(v: Any) -> str:
-    if v is None:
+    # NaT first: NaTType subclasses datetime, so the datetime branch below
+    # would render it as the string 'NaT' instead of null
+    if v is None or v is pd.NaT:
         return "∅"
     if isinstance(v, float):
         if math.isnan(v):
@@ -49,8 +51,6 @@ def _canon_cell(v: Any) -> str:
         return v.isoformat()
     if isinstance(v, (list, tuple)):
         return "[" + ",".join(_canon_cell(x) for x in v) + "]"
-    if v is pd.NaT:
-        return "∅"
     return str(v)
 
 
